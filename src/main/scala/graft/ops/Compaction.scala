@@ -4,10 +4,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the standing maintenance op of any streaming or
-  * per-archive ingest (both this engine's zip extractor at one-task-per-
-  * archive and its landing stream produce one file per input): rewrite a
-  * parquet dataset into files of roughly `targetBytes` so downstream scans
-  * open thousands, not millions, of files at 100 TB.
+  * multi-file ingest (this engine's landing stream writes one file per
+  * input, and the zip extractor's `singleFile=false` mode one file per
+  * byte-sized task, which for small archives at 100 TB is still many
+  * files): rewrite a parquet dataset into files of roughly `targetBytes`
+  * so downstream scans open thousands, not millions, of files at 100 TB.
   *
   * The target file count comes from the filesystem LISTING (no data scan);
   * the single data pass is a round-robin repartition — no key, so no skew

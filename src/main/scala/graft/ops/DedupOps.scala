@@ -2025,14 +2025,18 @@ object DedupOps {
     // Lloyd-trained one the trainer's own bounded √K-row output as
     // LocalRelation data — no constant-folded array literal on any arm
     val random1 = SimilarityOps.coarseFlatDf(s, k1)
-    val trained1 = SimilarityOps.oneRowFlatDf(s,
-      SimilarityOps.cosineFlatOfTrained(
-        SimilarityOps.lloydCodebook(
-          emb.select(col("vec_id"), col("embedding")), k1)))
-    def arm(coarse1: DataFrame, cb: String): DataFrame =
-      SimilarityOps.routedMeltAssign(samp, k, coarse1, k1, p1s)
+    // Lloyd drops cells that end an iteration empty, so the trained
+    // codebook can hold fewer than k1 cells (a corpus with fewer distinct
+    // vectors than k1): its probe clamp is the cell count it really has
+    val trainedFlat = SimilarityOps.cosineFlatOfTrained(
+      SimilarityOps.lloydCodebook(
+        emb.select(col("vec_id"), col("embedding")), k1))
+    val trained1 = SimilarityOps.oneRowFlatDf(s, trainedFlat)
+    def arm(coarse1: DataFrame, nCoarse: Int, cb: String): DataFrame =
+      SimilarityOps.routedMeltAssign(samp, k, coarse1, nCoarse, p1s)
         .select(lit(cb).as("cb"), col("p1"), col("vec_id"), col("cell"))
-    val assigned = arm(random1, "random").union(arm(trained1, "trained"))
+    val assigned = arm(random1, k1, "random")
+      .union(arm(trained1, trainedFlat.length / (SimilarityOps.Dim + 1), "trained"))
     val rbase = assigned.join(v, Seq("vec_id"))
     val pairs = rbase.as("a")
       .join(rbase.as("b"),

@@ -374,7 +374,7 @@ class ZipPartitionReader(
       // shared hardened read: maxBodyBytes guard + typed mid-inflate
       // errors, identical to the flatMap path's semantics
       val bytes = ZipExtract.readEntry(zin, maxBodyBytes, e.getName,
-        part.displayPath)
+        part.displayPath, e.getSize)
       if (needHash) hash = ZipExtract.sha256Hex(bytes)
       if (needBody) body = bytes
     }

@@ -4,9 +4,11 @@ import java.io.BufferedInputStream
 import java.security.MessageDigest
 import java.util.zip.ZipInputStream
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -113,16 +115,21 @@ object GraftError {
 /** Spark-native zip → rows extractor (reference dataflow:
   * src/builder.rs:23-119).
   *
-  * Scale design: the unit of parallelism is one Spark task per zip archive —
-  * the same granularity as the reference's one-thread-per-zip pool
-  * (src/builder.rs:49-50,64); a zip is not splittable (central directory +
-  * per-entry streams). We deliberately do NOT use `format("binaryFile")`,
-  * which materializes the whole archive as one row (2 GiB max, full copy in
-  * memory): instead tasks open a Hadoop `FileSystem` stream and decode with
-  * `ZipInputStream`, so memory per task is one *entry* body, not one
-  * archive — the same bound as the reference's streaming reads. On a
-  * 1000-executor cluster against 100 TB of zips this plan is a pure narrow
-  * pipeline (list → extract → write), zero shuffles.
+  * Scale design: archives are packed into tasks by byte size, the way
+  * Spark packs files into scan partitions — in listing (path) order, each
+  * task filled up to Spark's own file-split size (see [[packByBytes]]).
+  * An archive is never split (a zip is not splittable: central directory
+  * + per-entry streams), so a large archive still gets a task of its own,
+  * and many small archives share one instead of each paying a task. The
+  * reference runs one thread per zip (src/builder.rs:49-50,64); here the
+  * grain follows the bytes. We deliberately do NOT use
+  * `format("binaryFile")`, which materializes the whole archive as one row
+  * (2 GiB max, full copy in memory): instead tasks open a Hadoop
+  * `FileSystem` stream and decode with `ZipInputStream`, so memory per
+  * task is one *entry* body, not one archive — the same bound as the
+  * reference's streaming reads. The plan is a pure narrow pipeline
+  * (list → extract → write) with zero shuffles in both output modes; the
+  * single-file mode adds a driver-side row-group copy (see [[run]]).
   *
   * Reference pushdowns reproduced (SURVEY.md §4.1):
   *   - name-glob filter applied BEFORE body decompression
@@ -146,28 +153,67 @@ object ZipExtract {
     * open the right FileSystem; displayPath is the plain path for the
     * `source` column (the reference stores the path as given,
     * src/builder.rs:216 — local files there carry no `file:` scheme). */
-  def listInputs(spark: SparkSession, patterns: Seq[String]): Seq[(String, String)] = {
+  def listInputs(spark: SparkSession, patterns: Seq[String]): Seq[(String, String)] =
+    listArchives(spark, patterns).map(a => (a.readPath, a.displayPath))
+
+  /** One listed archive; `len` comes from the glob's own `FileStatus`. */
+  private[zip] final case class Archive(readPath: String, displayPath: String, len: Long)
+
+  /** [[listInputs]] with each archive's byte length, sorted by readPath. */
+  private[zip] def listArchives(spark: SparkSession, patterns: Seq[String]): Seq[Archive] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = patterns.flatMap { pat =>
+    val archives = patterns.flatMap { pat =>
       val p = new Path(pat)
       val fs = p.getFileSystem(conf)
       Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
         .filter(_.isFile).map { st =>
           val uri = st.getPath.toUri
           val display = if (uri.getScheme == "file") uri.getPath else st.getPath.toString
-          (st.getPath.toString, display)
+          Archive(st.getPath.toString, display, st.getLen)
         }
-    }.distinct.sortBy(_._1)
-    if (paths.isEmpty) GraftError.raise(GraftError.NoInputsFound(patterns))
-    paths
+    }.distinctBy(_.readPath).sortBy(_.readPath)
+    if (archives.isEmpty) GraftError.raise(GraftError.NoInputsFound(patterns))
+    archives
   }
 
-  /** The extractor: Dataset of zip paths → one row per matching entry.
-    * Narrow plan, one task per archive. */
+  /** Pack archive lengths into task groups the way Spark packs files into
+    * scan partitions (`FilePartition.maxSplitBytes`): each archive costs
+    * `len + openCost`, and a group fills up to
+    * `min(maxPartitionBytes, max(openCost, Σcost / parallelism))`. Groups
+    * are contiguous runs in the given (listing) order, so rows come out in
+    * archive order; an archive is never split, so one larger than the
+    * split size gets a group of its own. Returns index ranges into `lens`.
+    * This is a copy of Spark's rule, not a call into it, and it leaves out
+    * on purpose what would reorder or re-cut the groups: the file scan's
+    * largest-first sort (it would break archive order),
+    * `spark.sql.files.minPartitionNum` (the divisor is always
+    * `parallelism`) and `spark.sql.files.maxPartitionNum` (no regrouping
+    * cap). */
+  private[zip] def packByBytes(lens: IndexedSeq[Long], maxPartitionBytes: Long,
+      openCost: Long, parallelism: Int): Seq[Range] = {
+    val total = lens.map(_ + openCost).sum
+    val split = math.min(maxPartitionBytes,
+      math.max(openCost, total / math.max(1, parallelism)))
+    val groups = Seq.newBuilder[Range]
+    var start = 0
+    var filled = 0L
+    for (i <- lens.indices) {
+      val cost = lens(i) + openCost
+      if (i > start && filled + cost > split) {
+        groups += (start until i); start = i; filled = 0L
+      }
+      filled += cost
+    }
+    if (lens.nonEmpty) groups += (start until lens.length)
+    groups.result()
+  }
+
+  /** The extractor: archives → one row per matching entry. Narrow plan;
+    * archives are packed into byte-sized tasks ([[packByBytes]]) with no
+    * shuffle, and rows come out in (archive path, entry) order. */
   def entries(spark: SparkSession, cfg: ZipToParquetConfig,
       rowProgress: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
-    import spark.implicits._
     // Validate the glob on the driver so a bad pattern fails fast (B4).
     val globRegex: Option[String] = cfg.entryGlob.map { g =>
       try GlobRegex.translate(g)
@@ -175,7 +221,7 @@ object ZipExtract {
         GraftError.raise(GraftError.InvalidGlob(g, e.getMessage))
       }
     }
-    val paths = listInputs(spark, cfg.inputs)
+    val archives = listArchives(spark, cfg.inputs).toIndexedSeq
     val needBody = cfg.includeBody
     val needHash = cfg.includeHash
     val needRead = needBody || needHash // src/builder.rs:185
@@ -183,21 +229,24 @@ object ZipExtract {
     val maxBody = cfg.maxBodyBytes
     val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
 
-    // One task per archive: reference grain (src/builder.rs:64). repartition
-    // by path count so a 1000-zip input becomes 1000 tasks, not local[N].
-    val pathDs: Dataset[(String, String)] =
-      spark.createDataset(paths).repartition(paths.length)
-
-    val rows = pathDs.flatMap { case (readPath, displayPath) =>
-      val it = extractOne(readPath, displayPath, hadoopConf.value, globRegex,
-        needRead, needBody, needHash, needSource, maxBody)
+    val sqlConf = spark.sessionState.conf
+    val groups = packByBytes(archives.map(_.len), sqlConf.filesMaxPartitionBytes,
+      sqlConf.filesOpenCostInBytes, spark.sparkContext.defaultParallelism)
+      .map(r => r.map(i => (archives(i).readPath, archives(i).displayPath)))
+    val rows = spark.sparkContext.parallelize(groups, groups.length).flatMap { group =>
+      // archives open one after another as the previous one is drained
+      val it = group.iterator.flatMap { case (readPath, displayPath) =>
+        extractOne(readPath, displayPath, hadoopConf.value, globRegex,
+          needRead, needBody, needHash, needSource, maxBody)
+      }
       // O14 per-ROW grain (reference src/logger.rs:29-45 `inc(1)` per row):
       // the accumulator's task-partial value rides the executor heartbeat
-      // to the driver, so a listener can tick INSIDE a long single-archive
-      // task — one add per row, no driver round-trip on the hot path.
+      // to the driver, so a listener can tick INSIDE a long task — one add
+      // per row, no driver round-trip on the hot path.
       rowProgress.fold(it)(acc => it.map { r => acc.add(1L); r })
-    }(org.apache.spark.sql.Encoders.product[ZipEntryRow])
-    val df = rows.toDF()
+    }
+    val df = spark.createDataset(rows)(
+      org.apache.spark.sql.Encoders.product[ZipEntryRow]).toDF()
     // B2 byte-parity: reproduce the reference's quote-wrapped stored hash
     // (src/builder.rs:207 Debug-format bug). concat preserves NULL.
     if (cfg.quirkQuotedHash)
@@ -263,7 +312,8 @@ object ZipExtract {
             var body: Array[Byte] = null
             var hash: String = null
             if (needRead) {
-              val bytes = readEntry(zin, maxBodyBytes, e.getName, displayPath)
+              val bytes = readEntry(zin, maxBodyBytes, e.getName, displayPath,
+                e.getSize)
               if (needHash) hash = sha256Hex(bytes) // src/builder.rs:196-209
               if (needBody) body = bytes            // src/builder.rs:185-195
             }
@@ -285,17 +335,40 @@ object ZipExtract {
     * SURVEY.md §7.6). */
   private[graft] val EntryNameCharset = java.nio.charset.Charset.forName("IBM437")
 
+  /** Largest buffer [[readEntry]] allocates before it has read a byte. The
+    * header's size is archive input, and `ZipInputStream` checks it against
+    * the real body only when the entry ends, so a ~100-byte archive can
+    * claim a 1 GiB entry: the claim alone must not decide a large
+    * allocation. Honest bodies up to this size are still read in place. */
+  private[graft] val ReadEntryInitialCap: Int = 8 << 20
+
+  /** Read the current entry's body. `size` is the local header's
+    * uncompressed size, or -1 when the entry defers it to a data
+    * descriptor; when known, the buffer starts at that size (capped at
+    * `maxBytes` and [[ReadEntryInitialCap]]), so such a body is read in
+    * place with no regrowth copies and returned without a trailing copy.
+    * Memory grows only with the bytes actually inflated. */
   private[graft] def readEntry(zin: ZipInputStream, maxBytes: Long, name: String,
-      zipPath: String): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(8192)
-    val buf = new Array[Byte](1 << 16)
+      zipPath: String, size: Long): Array[Byte] = {
+    // no body may pass maxBytes, nor the JVM's largest byte array
+    val limit = math.max(0L, math.min(maxBytes, Int.MaxValue - 8L))
+    val first = math.min(if (size >= 0) size else 8192L, ReadEntryInitialCap.toLong)
+    var buf = new Array[Byte](math.min(first, limit).toInt)
+    var len = 0
     try {
-      var n = zin.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > maxBytes)
+      len = zin.readNBytes(buf, 0, buf.length)
+      // a full buffer probes for EOF before growing, so a body of the
+      // declared size is never copied
+      var next = if (len == buf.length) zin.read() else -1
+      while (next >= 0) {
+        if (len + 1L > limit)
           GraftError.raise(GraftError.EntryTooLarge(name, zipPath, maxBytes))
-        n = zin.read(buf)
+        buf = java.util.Arrays.copyOf(buf,
+          math.min(math.max(2L * len, 8192L), limit).toInt)
+        buf(len) = next.toByte
+        len += 1
+        len += zin.readNBytes(buf, len, buf.length - len)
+        next = if (len == buf.length) zin.read() else -1
       }
     } catch {
       case g: GraftError.GraftException => throw g // EntryTooLarge from above
@@ -304,7 +377,7 @@ object ZipExtract {
         // NonFatal: inflater internals can throw beyond ZipException|IOException.
         GraftError.raise(GraftError.ReadFileInZip(name, zipPath, x.toString))
     }
-    out.toByteArray
+    if (len == buf.length) buf else java.util.Arrays.copyOf(buf, len)
   }
 
   private def causeChain(t: Throwable): List[Throwable] =
@@ -322,17 +395,23 @@ object ZipExtract {
     * (reference sink: src/builder.rs:232-278). `singleFile=true` mirrors the
     * reference's one-output-FILE contract exactly: `-o PATH` yields a
     * regular parquet file at PATH (src/builder.rs:232-278 opens one
-    * `File`), not a Spark part-file directory — the dataset is written to a
-    * sibling temp directory with one part file, and that part is promoted
-    * to PATH by an O(1) rename. Fine at parity scale, NOT the default you
-    * want at 100 TB (pass singleFile=false to write a many-file directory
-    * and let the reader glob it).
+    * `File`), not a Spark part-file directory. Both modes run the same
+    * shuffle-free Spark plan: every extract task writes its own part file.
+    * In single-file mode the parts land in a sibling temp directory and
+    * the driver merges them, in part-name (= archive) order, with
+    * parquet-mr's `ParquetRewriter`: column chunks are copied verbatim (no
+    * decode, no re-encode), and column/offset indexes and Spark's footer
+    * metadata carry over. One part is promoted by an O(1) rename. The
+    * copy streams every output byte through the driver once — fine at
+    * parity scale, NOT what you want at 100 TB: pass singleFile=false to
+    * write a many-file directory and let the reader glob it.
     * Row-group sizing (reference `--row-group-size`, src/main.rs:41-43,
     * enforced by src/builder.rs:254 `set_max_row_group_size`): parquet-mr's
     * `parquet.block.row.count.limit` is the same rows-per-group ceiling, so
-    * the knob maps exactly. One deviation: parquet-mr ALSO closes a group
-    * when the byte limit (`parquet.block.size`) fills — a safety net the
-    * reference lacks; it never fires at the reference's 100-row default. */
+    * the knob maps exactly; the merge keeps each part's row groups as they
+    * are. One deviation: parquet-mr ALSO closes a group when the byte limit
+    * (`parquet.block.size`) fills — a safety net the reference lacks; it
+    * never fires at the reference's 100-row default. */
   def run(spark: SparkSession, cfg: ZipToParquetConfig,
       rowProgress: Option[org.apache.spark.util.LongAccumulator] = None)
       : Unit = {
@@ -340,15 +419,10 @@ object ZipExtract {
     if (cfg.output.isEmpty) GraftError.raise(GraftError.NeedsOutputOrStdout)
     val df0 = entries(spark, cfg, rowProgress)
     if (!cfg.singleFile) { writeParquetDir(df0, cfg, cfg.output); return }
-    // repartition(1), NOT coalesce(1): coalesce folds the upstream
-    // extraction into the single writer task (serializing the whole
-    // pipeline — observed 5x slower); repartition keeps one task per
-    // archive and funnels rows to one writer through an exchange — the
-    // same N-producers/1-consumer topology as the reference's channel
-    // (src/builder.rs:52-75).
+    val conf = spark.sparkContext.hadoopConfiguration
     val outPath = new Path(cfg.output)
     val fs =
-      try outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try outPath.getFileSystem(conf)
       catch { case e: java.io.IOException =>
         GraftError.raise(GraftError.WriteFile(cfg.output, e.toString))
       }
@@ -357,16 +431,22 @@ object ZipExtract {
     val tmp = new Path(cfg.output + ".graft-tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
     try {
-      writeParquetDir(df0.repartition(1), cfg, tmp.toString)
+      writeParquetDir(df0, cfg, tmp.toString)
       try {
-        val part = Option(fs.globStatus(new Path(tmp, "part-*")))
-          .getOrElse(Array.empty).headOption.getOrElse(
-            GraftError.raise(GraftError.WriteFile(cfg.output,
-              "single-file write produced no part file")))
+        // partition 0 always writes a file, even with no rows, so an empty
+        // extraction still yields a readable 0-row file with the schema
+        val parts = Option(fs.globStatus(new Path(tmp, "part-*")))
+          .getOrElse(Array.empty).map(_.getPath).sortBy(_.getName)
+        if (parts.isEmpty)
+          GraftError.raise(GraftError.WriteFile(cfg.output,
+            "single-file write produced no part file"))
+        val single =
+          if (parts.length == 1) parts.head
+          else mergeParts(conf, parts.toSeq, new Path(tmp, "merged.parquet"))
         // mode("overwrite") contract: replace whatever sits at PATH (file
         // or a directory from a previous multi-file run). Delete through
         // the CHECKSUMMED fs so a local .crc sibling of the old target
-        // goes with it, then rename through the RAW fs so the temp part's
+        // goes with it, then rename through the RAW fs so the temp file's
         // .crc stays behind in tmp (swept below) instead of appearing as
         // litter next to the user's output file.
         if (fs.exists(outPath)) fs.delete(outPath, true)
@@ -374,19 +454,34 @@ object ZipExtract {
           case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
           case other => other
         }
-        if (!rawFs.rename(part.getPath, outPath))
+        if (!rawFs.rename(single, outPath))
           GraftError.raise(GraftError.WriteFile(cfg.output,
-            s"rename ${part.getPath} -> $outPath failed"))
+            s"rename $single -> $outPath failed"))
       } catch {
         case e: GraftError.GraftException => throw e
         case e: java.io.IOException =>
           GraftError.raise(GraftError.WriteFile(cfg.output, e.toString))
+        case scala.util.control.NonFatal(e) =>
+          GraftError.raise(GraftError.Parquet(e.toString))
       }
     } finally {
-      // tmp holds only the committer droppings (_SUCCESS, .crc) after a
-      // successful promote — and the partial dataset after a failure.
+      // tmp holds only the committer droppings (_SUCCESS, .crc, merged
+      // parts) after a successful promote — and the partial dataset after
+      // a failure.
       try fs.delete(tmp, true) catch { case _: java.io.IOException => () }
     }
+  }
+
+  /** Concatenate parquet files into `merged`, row groups in input order,
+    * by copying column chunks verbatim (no decode, no re-encode); column
+    * and offset indexes and the footer key-value metadata carry over.
+    * (`ParquetFileWriter.appendFile` would drop both page indexes.) */
+  private def mergeParts(conf: Configuration, parts: Seq[Path], merged: Path): Path = {
+    val rewriter = new org.apache.parquet.hadoop.rewrite.ParquetRewriter(
+      new org.apache.parquet.hadoop.rewrite.RewriteOptions.Builder(
+        conf, parts.asJava, merged).build())
+    try rewriter.processBlocks() finally rewriter.close()
+    merged
   }
 
   private def writeParquetDir(df: DataFrame, cfg: ZipToParquetConfig,

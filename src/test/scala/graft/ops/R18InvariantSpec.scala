@@ -133,6 +133,29 @@ class R18InvariantSpec extends SparkSpec {
       b == c / k2h && b >= 0 && b < k1h && comps.size == 64 })
   }
 
+  test("recall melt survives a corpus with fewer distinct vectors than " +
+      "K1: the trained arm probes only the cells Lloyd returned") {
+    graft.GraftSession.init(spark)
+    // 40 copies of one vector: K = 8, K1 = 3, but Lloyd's seeds collapse
+    // into ONE trained cell, so probing K1 coarse cells would overrun it
+    val dir = java.nio.file.Files.createTempDirectory("meltdup").toString
+    val one = graft.ScaleGen.embeddings(spark, 1).select("embedding")
+    graft.ScaleGen.embeddings(spark, 40).drop("embedding")
+      .crossJoin(one)
+      .select("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val k1 = SimilarityOps.coarseCountFor(SimilarityOps.resolveCells(
+      Tables.embeddings(spark, dir), SimilarityOps.AutoCells)).toLong
+    assert(k1 == 3L)
+    val melt = DedupOps.nearDupRecallMelt(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(4)).toMap
+    val grid = for (cb <- Seq("random", "trained"); p <- Seq(2L, 3L, 4L, 8L))
+      yield (cb, p)
+    assert(melt.keySet == grid.toSet, s"melt grid: ${melt.keySet}")
+    // identical vectors share every cell: each arm catches every pair
+    assert(melt.values.forall(_ == 1.0), s"recall on all-duplicates: $melt")
+  }
+
   private def bruteSample(emb: DataFrame): DataFrame = {
     val v = emb.filter(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"),

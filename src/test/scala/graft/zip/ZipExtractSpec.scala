@@ -5,6 +5,8 @@ import java.nio.file.Files
 import java.security.MessageDigest
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
@@ -212,5 +214,100 @@ class ZipExtractSpec extends SparkSpec {
         assert(h == sha(byName(n)), s"hash mismatch for $n")
       }
     }
+  }
+
+  /** Three archives × five entries in their own directory, so listing
+    * order (= archive path order) is known. */
+  private lazy val mergeZips: Seq[String] = {
+    val d = new File(dir, "merge_in"); d.mkdirs()
+    (0 until 3).map { a =>
+      val f = new File(d, s"m$a.zip")
+      val z = new ZipOutputStream(new FileOutputStream(f))
+      (0 until 5).foreach { e =>
+        z.putNextEntry(new ZipEntry(s"a$a/e$e.txt"))
+        z.write(s"archive $a entry $e".getBytes("UTF-8")); z.closeEntry()
+      }
+      z.close()
+      f.getAbsolutePath
+    }
+  }
+  private def mergeGlob: String = s"${new File(mergeZips.head).getParent}/*.zip"
+
+  private def openFooter(path: String) =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+
+  test("archives pack into contiguous byte-sized groups; a large archive " +
+      "is never split") {
+    val mb = 1L << 20
+    // Σcost = 4 × (1 MiB + 4 MiB) + (60 MiB + 4 MiB) = 84 MiB over 4 cores
+    // → split = 21 MiB: four 5 MiB archives fit one group
+    val groups = ZipExtract.packByBytes(Vector(mb, mb, mb, mb, 60 * mb),
+      maxPartitionBytes = 128 * mb, openCost = 4 * mb, parallelism = 4)
+    assert(groups == Seq(0 until 4, 4 until 5))
+    // the split size is capped at maxPartitionBytes
+    assert(ZipExtract.packByBytes(Vector.fill(6)(10 * mb), 32 * mb, 4 * mb, 1)
+      == Seq(0 until 2, 2 until 4, 4 until 6))
+    // every archive alone once the per-core share is under one archive
+    assert(ZipExtract.packByBytes(Vector(mb, mb, mb), 128 * mb, 4 * mb, 8)
+      == Seq(0 until 1, 1 until 2, 2 until 3))
+  }
+
+  test("single-file merge: one file, row groups within the ceiling, rows in " +
+      "(archive, entry) order, page indexes and Spark footer metadata kept") {
+    val expected = for (a <- 0 until 3; e <- 0 until 5)
+      yield (s"a$a/e$e.txt", mergeZips(a))
+    val outs = (0 until 2).map { i =>
+      val out = new File(dir, s"merged$i.parquet").getAbsolutePath
+      ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(mergeGlob),
+        output = out, rowGroupSize = 3))
+      assert(new File(out).isFile)
+      out
+    }
+    for (out <- outs) {
+      val rows = spark.read.parquet(out).collect()
+        .map(r => (r.getAs[String]("name"), r.getAs[String]("source"))).toSeq
+      assert(rows == expected, s"row order in $out")
+      val reader = openFooter(out)
+      try {
+        val groups = reader.getRowGroups.asScala.toSeq
+        assert(groups.map(_.getRowCount).sum == 15)
+        assert(groups.forall(_.getRowCount <= 3),
+          s"row groups over the ceiling: ${groups.map(_.getRowCount)}")
+        // on the 2-core test session each archive (cost ≈ 4 MiB open cost)
+        // is its own task under a ≈ 6 MiB split, so three parts of (3, 2)
+        // rows were merged
+        assert(groups.map(_.getRowCount) == Seq(3L, 2L, 3L, 2L, 3L, 2L))
+        for (g <- groups; c <- g.getColumns.asScala) {
+          assert(reader.readColumnIndex(c) != null, s"no column index: ${c.getPath}")
+          assert(reader.readOffsetIndex(c) != null, s"no offset index: ${c.getPath}")
+        }
+        assert(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .containsKey("org.apache.spark.sql.parquet.row.metadata"))
+      } finally reader.close()
+    }
+    assert(!dir.listFiles().exists(_.getName.contains(".graft-tmp-")))
+  }
+
+  test("single-file run with a glob that matches no entry writes a readable " +
+      "0-row file with the 4-column schema") {
+    val outDir = new File(dir, "empty_out"); outDir.mkdirs()
+    val out = new File(outDir, "empty.parquet").getAbsolutePath
+    ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(mergeGlob),
+      output = out, entryGlob = Some("**/*.none")))
+    assert(new File(out).isFile)
+    val back = spark.read.parquet(out)
+    assert(back.count() == 0)
+    assert(back.columns.toSeq == Seq("name", "source", "body", "hash"))
+    assert(outDir.listFiles().map(_.getName).toSeq == Seq("empty.parquet"),
+      s"temp files left behind: ${outDir.listFiles().map(_.getName).mkString(", ")}")
+    // rows only in the last archive: the first task's part file has no
+    // row groups and the merge still concatenates the rest
+    val tail = new File(outDir, "tail.parquet").getAbsolutePath
+    ZipExtract.run(spark, ZipToParquetConfig(inputs = Seq(mergeGlob),
+      output = tail, entryGlob = Some("a2/*")))
+    assert(spark.read.parquet(tail).collect().map(_.getAs[String]("name")).toSeq ==
+      (0 until 5).map(e => s"a2/e$e.txt"))
   }
 }

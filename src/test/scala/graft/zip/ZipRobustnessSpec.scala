@@ -380,4 +380,118 @@ class ZipRobustnessSpec extends SparkSpec {
       sc.clearJobGroup()
     }
   }
+
+  test("readEntry sizes its buffer from the header when it can: STORED " +
+      "(size known) and data-descriptor (size -1) entries read exactly, " +
+      "and both honour maxBodyBytes") {
+    val rnd = new scala.util.Random(11)
+    val stored = new Array[Byte](20000); rnd.nextBytes(stored)
+    val deflated = Array.tabulate[Byte](30000)(i => (i % 97).toByte)
+    val f = new File(dir, "sizes.zip")
+    val z = new ZipOutputStream(new FileOutputStream(f))
+    val se = new ZipEntry("stored.bin")
+    val crc = new java.util.zip.CRC32(); crc.update(stored)
+    se.setMethod(ZipEntry.STORED); se.setSize(stored.length.toLong)
+    se.setCompressedSize(stored.length.toLong); se.setCrc(crc.getValue)
+    z.putNextEntry(se); z.write(stored); z.closeEntry()
+    z.putNextEntry(new ZipEntry("deflated.bin")); z.write(deflated); z.closeEntry()
+    z.close()
+    val bodies = Map("stored.bin" -> stored, "deflated.bin" -> deflated)
+
+    def eachEntry(maxBytes: Long)(check: (ZipEntry, () => Array[Byte]) => Unit): Unit = {
+      val zin = new java.util.zip.ZipInputStream(new java.io.FileInputStream(f))
+      try {
+        var e = zin.getNextEntry
+        while (e != null) {
+          val entry = e
+          check(entry, () => ZipExtract.readEntry(zin, maxBytes, entry.getName,
+            f.getName, entry.getSize))
+          e = zin.getNextEntry
+        }
+      } finally zin.close()
+    }
+    var sizes = Map.empty[String, Long]
+    eachEntry(1L << 20) { (e, read) =>
+      sizes += e.getName -> e.getSize
+      assert(read().sameElements(bodies(e.getName)), s"body of ${e.getName}")
+    }
+    // the two header shapes the buffer sizing distinguishes
+    assert(sizes == Map("stored.bin" -> stored.length.toLong, "deflated.bin" -> -1L))
+    // a body of exactly maxBodyBytes reads; one byte less raises EntryTooLarge
+    for (name <- bodies.keys) {
+      val n = bodies(name).length.toLong
+      eachEntry(n) { (e, read) =>
+        if (e.getName == name) assert(read().sameElements(bodies(name)))
+      }
+      eachEntry(n - 1) { (e, read) =>
+        if (e.getName == name) {
+          val err = intercept[GraftError.GraftException](read())
+          assert(err.err.isInstanceOf[GraftError.EntryTooLarge], s"$name: ${err.err}")
+        }
+      }
+    }
+    // and end to end through the extractor
+    val rows = ZipExtract.entries(spark,
+      ZipToParquetConfig(inputs = Seq(f.getAbsolutePath))).collect()
+    assert(rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](2).toSeq).toMap ==
+      bodies.map { case (k, v) => k -> v.toSeq })
+  }
+
+  /** A single DEFLATED entry whose local header carries the sizes (no data
+    * descriptor) and claims `claimedSize` uncompressed bytes. Only the local
+    * header is written: `ZipInputStream` never reads the central directory. */
+  private def headerSizedEntry(name: String, body: Array[Byte],
+      claimedSize: Long): Array[Byte] = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    d.setInput(body); d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val chunk = new Array[Byte](8192)
+    while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
+    d.end()
+    val data = out.toByteArray
+    val crc = new java.util.zip.CRC32(); crc.update(body)
+    val nameBytes = name.getBytes("UTF-8")
+    val h = java.nio.ByteBuffer.allocate(30 + nameBytes.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    h.putInt(0x04034b50).putShort(20.toShort).putShort(0.toShort) // sig, version, flags
+      .putShort(ZipEntry.DEFLATED.toShort).putShort(0.toShort).putShort(0.toShort)
+      .putInt(crc.getValue.toInt).putInt(data.length).putInt(claimedSize.toInt)
+      .putShort(nameBytes.length.toShort).putShort(0.toShort).put(nameBytes)
+    h.array ++ data
+  }
+
+  test("readEntry does not let an entry header's size decide a large " +
+      "allocation: a 1 GiB claim over a 100-byte body fails typed " +
+      "(ReadFileInZip) having allocated no more than the initial cap") {
+    val maxBytes = ZipToParquetConfig(inputs = Seq("unused")).maxBodyBytes
+    assert(maxBytes >= (1L << 30), "the claim must fit under maxBodyBytes")
+    def read(archive: Array[Byte]): Array[Byte] = {
+      val zin = new java.util.zip.ZipInputStream(
+        new java.io.ByteArrayInputStream(archive))
+      try {
+        val e = zin.getNextEntry
+        ZipExtract.readEntry(zin, maxBytes, e.getName, "lying.zip", e.getSize)
+      } finally zin.close()
+    }
+    val body = Array.tabulate[Byte](100)(_.toByte)
+    val lying = headerSizedEntry("claims-1g.bin", body, 1L << 30)
+    assert(lying.length < 200)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = threads.getCurrentThreadAllocatedBytes
+    val err = intercept[GraftError.GraftException](read(lying))
+    val allocated = threads.getCurrentThreadAllocatedBytes - before
+    err.err match {
+      case GraftError.ReadFileInZip(_, _, cause) =>
+        assert(cause.contains("invalid entry size"), cause)
+      case other => fail(s"expected ReadFileInZip, got $other")
+    }
+    assert(allocated < 2L * ZipExtract.ReadEntryInitialCap,
+      s"allocated $allocated bytes for a 100-byte body")
+    // an honest header-sized body past the cap still reads exactly
+    val big = Array.tabulate[Byte](ZipExtract.ReadEntryInitialCap + 1000)(i =>
+      (i % 251).toByte)
+    assert(read(headerSizedEntry("honest.bin", big, big.length.toLong))
+      .sameElements(big))
+  }
 }
